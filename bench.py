@@ -166,7 +166,7 @@ def main() -> None:
     detail = {
         "metric": "bench_detail",
         "sf": float(sf),
-        "runs_per_query": RUNS,
+        "runs_per_query": max(runs_done.values(), default=RUNS),
         "runs_done": runs_done,
         "respread_extra_run_pct": RESPREAD_PCT,
         "agg": "min",

@@ -112,6 +112,9 @@ class WorkerTokenProvider:
             return self._token.token_value
 
     async def get_token(self) -> str:
+        token = self._token  # a valid cached token needs no thread hop
+        if token is not None and not token.is_expired(self._margin):
+            return token.token_value
         return await asyncio.to_thread(self._get_token_blocking)
 
 

@@ -1499,7 +1499,11 @@ def pq_train(
         in _PQ_DRIVER_SAFE_ID_TYPES
     ):
         bounded = valid.limit(driver_max_rows + 1).collect()
-        if len(bounded) <= driver_max_rows:
+        # a null id has no Python order to mirror Spark's NULLS FIRST seed
+        # pick: the distributed loop handles it (same bailout as the CC gate)
+        if len(bounded) <= driver_max_rows and all(
+            r[0] is not None for r in bounded
+        ):
             return _pq_train_driver(
                 spark, bounded, dim, m, k_codes, iters, round_decimals
             )

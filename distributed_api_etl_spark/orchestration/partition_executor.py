@@ -11,10 +11,10 @@ Memory: rows are processed in chunks of ``execution.chunk_size`` and results
 are yielded incrementally — the whole partition is never materialized (the
 reference returns ``list[Row]``; at 100 TB that's an OOM).
 
-Event-loop lifecycle: ``asyncio.run`` per chunk. Engines that are
-``loop_bound`` (aiohttp) are created/closed inside the loop; thread-based
-engines are process-scoped via ``ProcessScope`` and reused across tasks
-(``spark.python.worker.reuse`` makes this pay off).
+Event-loop lifecycle: ``asyncio.run`` per chunk. ``loop_bound`` engines
+(aiohttp) are created/closed inside the loop; thread-based engines and their
+thread pools are process-scoped via ``ProcessScope`` and reused across
+chunks and tasks (``spark.python.worker.reuse`` makes this pay off).
 
 Everything captured by the returned closure is a plain picklable dict.
 """
@@ -52,7 +52,10 @@ from distributed_api_etl_spark.request_execution.models import (
     RequestContext,
     RequestExchange,
 )
-from distributed_api_etl_spark.request_execution.transport.registry import build_engine
+from distributed_api_etl_spark.request_execution.transport.registry import (
+    build_engine,
+    engine_class,
+)
 
 _SENTINEL = object()
 
@@ -143,13 +146,13 @@ async def _run_chunk(rows: list[dict[str, Any]], compiled: dict) -> list[dict[st
     rps = execution.get("max_requests_per_second")
 
     transport_cfg = compiled["transport"]
-    engine = build_engine(transport_cfg)
-    process_scoped = not engine.loop_bound
-    if process_scoped:
-        engine = ProcessScope.get(
-            "transport:" + json.dumps(transport_cfg, sort_keys=True, default=str),
-            lambda: build_engine(transport_cfg),
-        )
+    process_scoped = not engine_class(transport_cfg).loop_bound
+    key = "transport:" + json.dumps(transport_cfg, sort_keys=True, default=str)
+    engine = (
+        ProcessScope.get(key, lambda: build_engine(transport_cfg))
+        if process_scoped
+        else build_engine(transport_cfg)
+    )
 
     executor = RequestExecutor(engine)
     limiter = RateLimiter(rps) if rps else None

@@ -1,21 +1,25 @@
 """Thread-bridged HTTP engine built on ``requests`` (stdlib-adjacent, always
-available). The async boundary is ``asyncio.to_thread``: the event loop stays
-responsive while a pooled ``requests.Session`` does blocking I/O in the
-default executor.
+available). The async boundary is ``loop.run_in_executor`` on the engine's
+own ``ThreadPoolExecutor``: the event loop stays responsive while a pooled
+``requests.Session`` does blocking I/O on one of those threads.
 
 Why this exists: aiohttp may be absent from the runtime image. The engine
 abstraction keeps the pipeline identical either way; on clusters with
 aiohttp installed, ``transport.engine: aiohttp`` selects the native-async
 path (see aiohttp_engine.py).
 
-Concurrency: the per-partition consumer count (``max_concurrent_requests``,
-default 20) bounds in-flight requests; the session's connection pool is
-sized to match so sockets are reused, not thrashed.
+Concurrency: ``pool_limit`` (default 100) sizes both the thread pool and
+urllib3's connection pool, so requests in flight per partition are
+``min(max_concurrent_requests, pool_limit)``. The loop's default executor
+would cap them at min(32, cpu + 4) threads instead. Threads start on demand
+and, like the session, live as long as the process-scoped engine.
 """
 
 from __future__ import annotations
 
 import asyncio
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 from distributed_api_etl_spark.request_execution.models import (
     TransportRequest,
@@ -39,9 +43,17 @@ class RequestsEngine(TransportEngine):
         self._verify = verify_tls
         self._cert = client_cert
         self._session = None
+        self._session_lock = threading.Lock()
+        self._pool = ThreadPoolExecutor(
+            max_workers=pool_limit, thread_name_prefix="requests-engine"
+        )
 
     def _get_session(self):
-        if self._session is None:
+        if self._session is not None:
+            return self._session
+        with self._session_lock:  # first sends race in from many pool threads
+            if self._session is not None:
+                return self._session
             import requests
             from requests.adapters import HTTPAdapter
 
@@ -81,9 +93,11 @@ class RequestsEngine(TransportEngine):
             return TransportResponse(error=f"{type(exc).__name__}: {exc}")
 
     async def send(self, request: TransportRequest) -> TransportResponse:
-        return await asyncio.to_thread(self._send_sync, request)
+        loop = asyncio.get_running_loop()
+        return await loop.run_in_executor(self._pool, self._send_sync, request)
 
     async def aclose(self) -> None:
+        self._pool.shutdown(wait=False)
         if self._session is not None:
             self._session.close()
             self._session = None

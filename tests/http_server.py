@@ -11,6 +11,12 @@ import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 
+class _Server(ThreadingHTTPServer):
+    # listen backlog: socketserver's default of 5 drops the SYNs of a burst
+    # of new keep-alive connections, which the client retries only after 1 s
+    request_queue_size = 128
+
+
 class MockApiServer:
     def __init__(self) -> None:
         self.in_flight = 0
@@ -95,7 +101,7 @@ class MockApiServer:
                 else:
                     self._reply(404, {"error": "not found"})
 
-        self._server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+        self._server = _Server(("127.0.0.1", 0), Handler)
         self.port = self._server.server_address[1]
         self.base_url = f"http://127.0.0.1:{self.port}"
         self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)

@@ -2480,6 +2480,30 @@ def test_pq_train_kernel_equals_hof(spark, sf_dir):
     )
 
 
+def test_pq_train_null_id_driver_gate_matches_loop(spark):
+    """A null id is valid input to the distributed loop, so the driver gate
+    must not crash on it (Python cannot order None against ints): the gated
+    call returns the same codebook as the forced distributed loop."""
+    from distributed_api_etl_spark.operators.similarity import pq_train
+
+    corpus = spark.createDataFrame(
+        [(None, [9.0, 1.0, 4.0, 2.0])]
+        + [(i, [float((i * j) % 7) for j in range(4)]) for i in range(12)],
+        "vec_id bigint, embedding array<double>",
+    )
+
+    def rows(df):
+        return sorted((r.s, r.code, tuple(r.cw)) for r in df.collect())
+
+    gated = rows(pq_train(corpus, "vec_id", "embedding", 4, m=2, k_codes=3))
+    loop = rows(
+        pq_train(
+            corpus, "vec_id", "embedding", 4, m=2, k_codes=3, driver_max_rows=0
+        )
+    )
+    assert gated == loop and len(gated) > 0
+
+
 def test_pq_encode_kernel_equals_hof(spark, sf_dir):
     """The numpy PQ encode kernel (r16) must emit the exact codes of the
     m interpreted argmin folds it replaces — real corpus + a trained

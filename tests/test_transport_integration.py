@@ -250,6 +250,62 @@ def test_token_cached_until_expiry(server):
     assert server.token_grants == grants  # cache hit, no new grant
 
 
+def test_requests_engine_reaches_configured_concurrency(server):
+    """The requests engine sends on its own thread pool (sized by
+    ``pool_limit``), not on the event loop's default executor, whose
+    min(32, cpu + 4) threads would cap 40 configured consumers at 32 or
+    fewer requests in flight on any machine."""
+    cfg = compiled(
+        server,
+        path="/slow",
+        transport={"engine": "requests", "base_timeout": 5.0},
+        execution={"max_concurrent_requests": 40, "chunk_size": 1000},
+    )
+    cfg["endpoint"]["param_mapping"].append(
+        {"endpoint_param": "ms", "source_column": "ms"}
+    )
+    # 200 ms per request: the 40 consumers ramp up well inside one service
+    # time, so all 40 overlap even on a loaded machine
+    slow_rows = [{"request_id": str(i), "ms": "200"} for i in range(120)]
+    server.max_in_flight = 0
+    out = list(run_rows(slow_rows, cfg))
+    assert len(out) == 120 and all(r["status_code"] == 200 for r in out)
+    assert server.max_in_flight == 40
+
+
+def test_requests_engine_builds_one_session_under_contention():
+    """The first sends race from many pool threads into the lazily built
+    session: all of them must share one session (a lost race leaks a
+    session and the connections it opened)."""
+    import sys
+    import threading
+
+    from distributed_api_etl_spark.request_execution.transport.threaded import (
+        RequestsEngine,
+    )
+
+    engine = RequestsEngine()
+    barrier = threading.Barrier(16)
+    got = []
+
+    def grab():
+        barrier.wait(timeout=10)
+        got.append(engine._get_session())
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=grab) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=10)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 16 and len({id(s) for s in got}) == 1
+
+
 def test_full_pipeline_against_real_server(spark, server, tmp_path):
     from pyspark.sql import functions as F
 
@@ -323,6 +379,6 @@ def test_concurrency_hides_io_latency():
         seq = run(1)
         conc = run(12)
         assert seq / conc > 2.5, (seq, conc)
-        assert srv.max_in_flight >= 8
+        assert srv.max_in_flight == 12
     finally:
         srv.stop()
