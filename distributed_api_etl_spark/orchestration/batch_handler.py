@@ -1,9 +1,10 @@
-"""Batch -> mapPartitions(HTTP) -> typed bronze rows -> sink.
+"""Batch -> mapInPandas(HTTP) -> typed bronze rows -> sink.
 
-Reference parity: src/orchestration/batch_handler.py, with typed schema
-construction by name (no positional renaming bug) and a pluggable sink:
-parquet append (default), Delta append, or Delta MERGE on request_id for
-exactly-once upsert when delta-spark is installed.
+Reference parity: src/orchestration/batch_handler.py, with one Arrow stage
+typed by ``BRONZE_SCHEMA`` by name (no positional renaming bug) and a
+pluggable sink: parquet append (default), Delta append, or Delta MERGE on
+request_id for exactly-once upsert when delta-spark is installed. Batch
+runs, dry runs and streaming share the source prep (``prepare_source``).
 """
 
 from __future__ import annotations
@@ -13,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from distributed_api_etl_spark.core.bronze import BRONZE_SCHEMA
 from distributed_api_etl_spark.orchestration.partition_executor import (
     build_map_in_pandas_fn,
-    build_partition_fn,
 )
 
 
@@ -32,21 +32,10 @@ class BronzeBatchHandler:
         self._sink = sink
         self.collected: list[DataFrame] = []  # dry-run mode accumulates here
 
-    def transform(self, batch_df: DataFrame, use_arrow: bool = True) -> DataFrame:
-        """HTTP-execute a batch. Default is the Arrow path (``mapInPandas``):
-        rows arrive as Arrow batches and bronze records leave as Arrow
-        batches — no ``df.rdd`` conversion (~1s driver-side per batch) and
-        no per-row pickling. The RDD path is kept for diagnostics parity."""
-        if use_arrow:
-            return batch_df.mapInPandas(
-                build_map_in_pandas_fn(self._compiled), BRONZE_SCHEMA
-            )
-        fn = build_partition_fn(self._compiled)
-        rdd = batch_df.rdd.mapPartitions(fn)
-        return self._spark.createDataFrame(rdd, BRONZE_SCHEMA)
-
     def process(self, batch_df: DataFrame) -> None:
-        result = self.transform(batch_df)
+        result = batch_df.mapInPandas(
+            build_map_in_pandas_fn(self._compiled), BRONZE_SCHEMA
+        )
         if self._sink is None:
             # dry-run: materialize now (localCheckpoint) so a re-run of the
             # lineage doesn't re-fire HTTP requests, then accumulate

@@ -1,15 +1,16 @@
 """Worker-side async fan-out: the core non-relational operator.
 
-One Spark task == one partition of request rows. Inside the task we run an
-asyncio producer/consumer pool: a bounded queue (backpressure — the
-reference documents ``maxsize=2*limit`` but ships an unbounded queue;
-here it is actually bounded), ``max_concurrent_requests`` consumers, an
-optional shared token-bucket rate limiter, and a middleware chain ending in
-the HTTP transport.
+One Spark task == one partition of request rows (the ``mapInPandas`` body
+built by ``build_map_in_pandas_fn``). Inside the task we run an asyncio
+producer/consumer pool: a queue bounded at ``2 * max_concurrent_requests``
+(backpressure — the reference documents ``maxsize=2*limit`` but ships an
+unbounded queue), ``max_concurrent_requests`` consumers, an optional shared
+token-bucket rate limiter, and a middleware chain ending in the HTTP
+transport.
 
-Memory: rows are processed in chunks of ``execution.chunk_size`` and results
-are yielded incrementally — the whole partition is never materialized (the
-reference returns ``list[Row]``; at 100 TB that's an OOM).
+Memory: rows are processed in chunks of ``execution.chunk_size`` and each
+chunk leaves as one bronze frame — the whole partition is never
+materialized (the reference returns ``list[Row]``; at 100 TB that's an OOM).
 
 Event-loop lifecycle: ``asyncio.run`` per chunk. ``loop_bound`` engines
 (aiohttp) are created/closed inside the loop; thread-based engines and their
@@ -142,7 +143,6 @@ def build_middlewares(compiled: dict, transport_diag: dict | None = None) -> lis
 async def _run_chunk(rows: list[dict[str, Any]], compiled: dict) -> list[dict[str, Any]]:
     execution = compiled["execution"]
     concurrency = max(1, int(execution.get("max_concurrent_requests", 20)))
-    queue_max = concurrency * max(1, int(execution.get("queue_maxsize_factor", 2)))
     rps = execution.get("max_requests_per_second")
 
     transport_cfg = compiled["transport"]
@@ -178,7 +178,7 @@ async def _run_chunk(rows: list[dict[str, Any]], compiled: dict) -> list[dict[st
         build_middlewares(compiled, transport_diag), executor.send
     )
 
-    queue: asyncio.Queue = asyncio.Queue(maxsize=queue_max)
+    queue: asyncio.Queue = asyncio.Queue(maxsize=2 * concurrency)
     results: list[dict[str, Any]] = []
 
     async def producer() -> None:
@@ -208,35 +208,24 @@ async def _run_chunk(rows: list[dict[str, Any]], compiled: dict) -> list[dict[st
     return results
 
 
-def run_rows(rows: Iterable[dict[str, Any]], compiled: dict) -> Iterator[dict[str, Any]]:
-    """Chunked sync->async bridge; yields bronze records incrementally."""
+def _run_chunks(rows: Iterable[dict[str, Any]], compiled: dict) -> Iterator[list[dict]]:
+    """Chunked sync->async bridge: one ``asyncio.run`` and one list of bronze
+    records per ``execution.chunk_size`` input rows."""
     chunk_size = max(1, int(compiled["execution"].get("chunk_size", 5000)))
     it = iter(rows)
-    while True:
-        chunk = list(itertools.islice(it, chunk_size))
-        if not chunk:
-            return
-        yield from asyncio.run(_run_chunk(chunk, compiled))
+    while chunk := list(itertools.islice(it, chunk_size)):
+        yield asyncio.run(_run_chunk(chunk, compiled))
 
 
-def build_partition_fn(compiled: dict):
-    """Returns the mapPartitions body: Iterator[Row] -> Iterator[tuple].
-
-    Output tuples follow BRONZE_COLUMNS order for createDataFrame(schema).
-    """
-    from distributed_api_etl_spark.core.bronze import BRONZE_COLUMNS
-
-    def partition_fn(rows) -> Iterator[tuple]:
-        dict_rows = (r.asDict() if hasattr(r, "asDict") else dict(r) for r in rows)
-        for record in run_rows(dict_rows, compiled):
-            yield tuple(record[c] for c in BRONZE_COLUMNS)
-
-    return partition_fn
+def run_rows(rows: Iterable[dict[str, Any]], compiled: dict) -> Iterator[dict[str, Any]]:
+    """Yields bronze records incrementally, one chunk in memory at a time."""
+    for records in _run_chunks(rows, compiled):
+        yield from records
 
 
 def build_map_in_pandas_fn(compiled: dict):
     """Returns the mapInPandas body: Iterator[pd.DataFrame] -> same, with
-    BRONZE_COLUMNS output.
+    BRONZE_COLUMNS output, one frame per chunk.
 
     The Arrow path: no ``df.rdd`` conversion (which costs ~1s of driver-side
     plan analysis per batch) and no per-row pickle — input rows arrive as
@@ -257,14 +246,7 @@ def build_map_in_pandas_fn(compiled: dict):
                         for c, v in zip(cols, tup)
                     }
 
-        flush_size = max(1, int(compiled["execution"].get("chunk_size", 5000)))
-        buf: list[dict] = []
-        for record in run_rows(dict_rows(), compiled):
-            buf.append(record)
-            if len(buf) >= flush_size:
-                yield pd.DataFrame(buf, columns=list(BRONZE_COLUMNS))
-                buf = []
-        if buf:
-            yield pd.DataFrame(buf, columns=list(BRONZE_COLUMNS))
+        for records in _run_chunks(dict_rows(), compiled):
+            yield pd.DataFrame(records, columns=list(BRONZE_COLUMNS))
 
     return fn

@@ -1468,7 +1468,7 @@ def events_hot_user_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     come back exactly once with a NULL — the miss-duplication failure
     mode the operator's how-guard exists for. Measured per-task spread
     (plain vs salted layout at sf0.1) is recorded in SCALE.md
-    (scripts/probe_skew_join_r15.py)."""
+    ("Hot-key salted join: measured per-task spread")."""
     from distributed_api_etl_spark.operators.skew import salted_join
 
     ev = table(spark, sf_dir, "events").select(
@@ -1529,7 +1529,7 @@ def events_hot_user_autosalted_join(spark: SparkSession, sf_dir: str) -> DataFra
     set; the head asserts the measurement actually detected the hot key
     (derived n_salts > 1) so a silent measurement regression cannot grade
     green. Residual-spread flattening vs fixed 16 salts is measured in
-    SCALE.md (scripts/probe_autosalt_r16.py)."""
+    SCALE.md ("Auto-sized salting: the oversalt factor, measured")."""
     from distributed_api_etl_spark.operators.skew import auto_salted_join
 
     ev = table(spark, sf_dir, "events").select(

@@ -297,7 +297,8 @@ def api_pipeline_rate_limited(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~75 ms of margin on the limited side. Aggregation is one tiny agg on
     a 25-row frame; monotonic stamps never compare across partitions:
     ``execution.num_partitions: 1`` is applied by the orchestrator's
-    dry_run branch via the same repartition as BatchProcessor.process
+    dry_run branch via BatchProcessor.batches, the batch split
+    BatchProcessor.process also iterates
     (tests/test_pipeline_e2e.py::test_dry_run_num_partitions_binds_on_multipartition_source
     proves the invariant survives a multi-partition source)."""
     from distributed_api_etl_spark.orchestration import run_pipeline

@@ -3,9 +3,10 @@
 The reference's batch engine is morally a micro-batch stream (anti-join diff
 -> process -> append, repeated). The Spark-native form IS Structured
 Streaming: ``readStream`` source -> ``foreachBatch`` that reuses the exact
-same compiled partition executor + bronze writer per micro-batch, with
-checkpointed offsets replacing the anti-join for incrementality (the
-anti-join remains as a safety net for at-least-once sinks).
+same source prep (``orchestrator.prepare_source``), compiled partition
+executor and bronze writer per micro-batch, with checkpointed offsets
+replacing the anti-join for incrementality (the anti-join remains as a
+safety net for at-least-once sinks).
 
 100 TB / continuous-ingest design notes:
   * offsets+checkpoint give exactly-once *source* progress; the sink stays
@@ -21,12 +22,14 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from distributed_api_etl_spark.config.loader import load_config
 from distributed_api_etl_spark.config.models import PipelineConfig
 from distributed_api_etl_spark.orchestration.batch_handler import BronzeBatchHandler
-from distributed_api_etl_spark.orchestration.orchestrator import PipelineOrchestrator
+from distributed_api_etl_spark.orchestration.orchestrator import (
+    PipelineOrchestrator,
+    prepare_source,
+)
 
 
 def run_streaming_pipeline(
@@ -51,20 +54,14 @@ def run_streaming_pipeline(
     sink = orch._sink_dict()  # noqa: SLF001 - same-package orchestration
     if sink is None:
         raise ValueError("streaming pipeline requires a configured sink")
+    if source_id not in stream_df.columns:
+        raise ValueError(
+            f"source_id {source_id!r} not in stream columns {stream_df.columns}"
+        )
     handler = BronzeBatchHandler(spark, compiled, sink)
-    ep = config.endpoint
-    needed = {
-        m.source_column for m in ep.param_mapping + ep.json_body_mapping
-    } | ep.template_columns()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        df = batch_df
-        if source_id != "request_id":
-            df = df.withColumnRenamed(source_id, "request_id")
-        cols = [c for c in df.columns if c in needed | {"request_id"}]
-        df = df.select(*cols).withColumn(
-            "request_id", F.col("request_id").cast("string")
-        )
+        df = prepare_source(batch_df, source_id, config.endpoint)
         n = config.execution.num_partitions or spark.sparkContext.defaultParallelism
         handler.process(df.repartition(n))
 

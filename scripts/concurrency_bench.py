@@ -47,7 +47,6 @@ def compiled(base_url: str, latency_ms: int, concurrency: int) -> dict:
         "middleware": [{"type": "timing"}],
         "execution": {
             "max_concurrent_requests": concurrency,
-            "queue_maxsize_factor": 2,
             "chunk_size": 1000,
         },
     }

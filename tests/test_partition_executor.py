@@ -1,5 +1,5 @@
 """Partition executor tested directly on Python iterators (the reference's
-integration-test strategy: the mapPartitions fn needs no cluster)."""
+integration-test strategy: the partition body needs no cluster)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import time
 from distributed_api_etl_spark.core.bronze import BRONZE_COLUMNS
 from distributed_api_etl_spark.core.runtime import ProcessScope, RateLimiter
 from distributed_api_etl_spark.orchestration.partition_executor import (
-    build_partition_fn,
+    build_map_in_pandas_fn,
     run_rows,
 )
 
@@ -27,7 +27,6 @@ def compiled(**over):
         "middleware": [{"type": "timing"}, {"type": "worker_identity"}],
         "execution": {
             "max_concurrent_requests": 8,
-            "queue_maxsize_factor": 2,
             "chunk_size": 50,
         },
         "fixed_time": "2024-01-01T00:00:00",
@@ -122,10 +121,44 @@ def test_retry_with_injected_failures_end_to_end():
     assert all(r["attempts"] == 3 for r in out)
 
 
-def test_partition_fn_emits_bronze_tuples():
-    fn = build_partition_fn(compiled())
-    out = list(fn(iter(rows(5))))
-    assert len(out) == 5
-    assert all(len(t) == len(BRONZE_COLUMNS) for t in out)
-    idx = BRONZE_COLUMNS.index("status_code")
-    assert all(t[idx] == 200 for t in out)
+def test_map_in_pandas_fn_emits_one_bronze_frame_per_chunk(monkeypatch):
+    import json
+
+    import numpy as np
+    import pandas as pd
+
+    import distributed_api_etl_spark.orchestration.partition_executor as pe
+    from distributed_api_etl_spark.request_execution.models import TransportResponse
+
+    class JsonEchoEngine:
+        loop_bound = False
+
+        async def send(self, request):
+            # serialise the body as a wire transport does: numpy scalars raise
+            body = json.dumps(request.json_body).encode()
+            return TransportResponse(status_code=200, body=body)
+
+    monkeypatch.setattr(pe, "build_engine", lambda cfg: JsonEchoEngine())
+    cfg = compiled(
+        endpoint={
+            "method": "POST",
+            "url": "http://mock.local/x",
+            "json_body_mapping": [{"endpoint_param": "n", "source_column": "n"}],
+        },
+        execution={"max_concurrent_requests": 4, "chunk_size": 10},
+    )
+    ids = np.arange(25, dtype=np.int64)
+    batches = iter([
+        pd.DataFrame({"request_id": ids[:12].astype(str), "n": ids[:12]}),
+        pd.DataFrame({"request_id": ids[12:].astype(str), "n": ids[12:]}),
+    ])
+    try:
+        frames = list(build_map_in_pandas_fn(cfg)(batches))
+    finally:
+        ProcessScope.clear()  # drop the patched engine from the process cache
+    assert [len(f) for f in frames] == [10, 10, 5]
+    assert all(list(f.columns) == list(BRONZE_COLUMNS) for f in frames)
+    out = pd.concat(frames)
+    assert out["success"].all()
+    bodies = dict(zip(out["request_id"], out["body_text"].map(json.loads)))
+    assert bodies == {str(i): {"n": i} for i in range(25)}

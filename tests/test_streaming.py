@@ -90,6 +90,55 @@ def test_streaming_pipeline_foreach_batch(spark, tmp_path, stream_source):
     assert spark.read.parquet(sink).count() == 50
 
 
+def test_streaming_param_mapping_on_id_column_is_injected(spark, tmp_path):
+    """Streaming shares the batch source prep: a mapping whose source_column
+    is the id column still sends the parameter (the id is copied to
+    request_id, not renamed away)."""
+    import json
+
+    src = str(tmp_path / "ids_src")
+    spark.createDataFrame([("t1",), ("t2",)], "tracking_id string").write.parquet(src)
+    sink = str(tmp_path / "bronze")
+    cfg = {
+        "endpoint": {
+            "method": "GET",
+            "url": "http://mock.local/api/items",
+            "param_mapping": [{"endpoint_param": "id", "source_column": "tracking_id"}],
+        },
+        "transport": {"engine": "mock"},
+        "execution": {"num_partitions": 2},
+        "tables": {"sink": {"location": sink, "format": "parquet"}},
+    }
+    q = run_streaming_pipeline(
+        spark, cfg, spark.readStream.schema("tracking_id string").parquet(src),
+        source_id="tracking_id", checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    rows = {r.request_id: r for r in spark.read.parquet(sink).collect()}
+    assert set(rows) == {"t1", "t2"}
+    # mock echoes params: the id parameter must actually have been sent
+    assert {k: json.loads(r.body_text) for k, r in rows.items()} == {
+        "t1": {"id": "t1"},
+        "t2": {"id": "t2"},
+    }
+
+
+def test_streaming_rejects_missing_source_id(spark, tmp_path, stream_source):
+    cfg = {
+        "endpoint": {"method": "GET", "url": "http://mock.local/api/things"},
+        "transport": {"engine": "mock"},
+        "tables": {"sink": {"location": str(tmp_path / "bronze"), "format": "parquet"}},
+    }
+    active = len(spark.streams.active)
+    ckpt = tmp_path / "ckpt"
+    with pytest.raises(ValueError, match="not_an_id"):
+        run_streaming_pipeline(
+            spark, cfg, stream_source, source_id="not_an_id", checkpoint_dir=str(ckpt)
+        )
+    assert len(spark.streams.active) == active
+    assert not ckpt.exists()  # no query was started
+
+
 def _events_stream(spark, sf_dir, tmp_path):
     # re-materialize events (ts normalized) as a file stream source
     from distributed_api_etl_spark.queries.registry import table
