@@ -329,19 +329,28 @@ def connected_components_two_phase(
     exactly via symmetric-difference count, a driver-side scalar). Output:
     (node, cluster_id = component minimum) for every node in ``edges``.
     """
+    # ONE truncated projection of the raw endpoints feeds both the edge set
+    # and the node set, so ``edges``' upstream runs once
+    ends = truncate_lineage(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+        eager=False,  # e.count() below materializes it
+    )
     # canonical undirected pairs, self-loops dropped
     e = truncate_lineage(
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("p"),
-            F.greatest(F.col(src), F.col(dst)).alias("q"),
+        ends.select(
+            F.least(F.col("a"), F.col("b")).alias("p"),
+            F.greatest(F.col("a"), F.col("b")).alias("q"),
         )
         .where(F.col("p") != F.col("q"))
         .distinct(),
         eager=False,  # e.count() below materializes it
     )
+    # nodes come from the endpoints BEFORE the self-loop filter (least /
+    # greatest also skip nulls): a self-loop-only node and a null endpoint
+    # each label themselves, as in the label-propagation loop
     all_nodes = truncate_lineage(
-        e.select(F.col("p").alias("node"))
-        .unionByName(e.select(F.col("q").alias("node")))
+        ends.select(F.col("a").alias("node"))
+        .unionByName(ends.select(F.col("b").alias("node")))
         .distinct(),
         eager=False,  # only read once, by the final label join
     )

@@ -1297,16 +1297,6 @@ def lsh_params_for(
 # lookup tables (ADC, asymmetric distance computation).
 
 
-def _sq_l2(a, b) -> Column:
-    """Sequential-fold squared L2 distance — ((0+t1)+t2)+... exactly, which
-    DuckDB's list_reduce reproduces term for term (0+t1 == t1 in IEEE)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _cb_array(codebook: DataFrame) -> DataFrame:
     """Collapse a codebook to ONE broadcastable row holding the
     (s, code)-sorted array<struct{s, code, cw}> — the ivf_assign shape."""
@@ -1348,11 +1338,11 @@ def _collect_codebook(codebook: DataFrame) -> dict:
 
 def _argmin_codes(V, codes, cents):
     """Per-row nearest code of ``V`` (n x d_sub float64) under EXACTLY the
-    HOF fold's semantics: squared-L2 terms ``(x-y)*(x-y)`` accumulated in
-    component order into a float64 (the :func:`_sq_l2` sequence, so
-    distances are BIT-IDENTICAL), strictly-less comparison keeping the
-    lowest code on exact ties (rows sorted by code; argmin returns the
-    first minimum)."""
+    JVM fold's semantics: squared-L2 terms ``(x-y)*(x-y)`` accumulated in
+    component order into a float64 (the sequential fold DuckDB's
+    list_reduce reproduces, so distances are BIT-IDENTICAL), strictly-less
+    comparison keeping the lowest code on exact ties (rows sorted by code;
+    argmin returns the first minimum)."""
     import numpy as np
 
     acc = np.zeros((V.shape[0], cents.shape[0]), dtype=np.float64)
@@ -1360,90 +1350,6 @@ def _argmin_codes(V, codes, cents):
         d = V[:, j, None] - cents[None, :, j]
         acc += d * d
     return codes[np.argmin(acc, axis=1)]
-
-
-# Below this many VALID vectors the whole PQ training loop runs on the
-# driver: ONE bounded collect (rows x dim doubles — 100 MB at the cap for
-# dim=64) + numpy Lloyd's, instead of per-iteration distributed kernel
-# passes whose job/planning latency dominates at bench scale (profiled
-# r17: 2.3 s of iteration jobs + gaps for a 2k-vector corpus). Same
-# size-gate discipline as graph.py's DRIVER_CC_MAX_EDGES: the gate is on
-# a MEASURED count, larger corpora take the distributed loop unchanged —
-# and a 100 TB system trains PQ on a sample of about this size anyway.
-PQ_TRAIN_DRIVER_MAX_ROWS = 200_000
-
-# id types whose Python ordering equals Spark's ORDER BY (seed selection
-# must agree with the distributed path): the graph.py argument verbatim.
-_PQ_DRIVER_SAFE_ID_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
-
-
-def _pq_train_driver(
-    spark,
-    rows,
-    dim: int,
-    m: int,
-    k_codes: int,
-    iters: int,
-    round_decimals: int,
-):
-    """Numpy Lloyd's over a BOUNDED collected corpus — identical output to
-    the distributed pq_train loop (same :func:`_argmin_codes` assignment
-    over the same float64 matrix, same seed rule). The per-centroid mean
-    is computed unrounded in numpy, then rounded BY SPARK's own round
-    expression via a LocalRelation projection (ConvertToLocalRelation
-    folds it on the driver — zero jobs), so the graded float grid is the
-    engine's, not a Python reimplementation of java's HALF_UP."""
-    import numpy as np
-
-    d_sub = dim // m
-    rows = sorted(rows, key=lambda r: r[0])
-    V = np.array([list(r[1])[:dim] for r in rows], dtype=np.float64)
-    seed_mat = V[:k_codes]
-    cb = {
-        s: (
-            np.arange(min(k_codes, len(rows)), dtype=np.int64),
-            seed_mat[:, s * d_sub : (s + 1) * d_sub].copy(),
-        )
-        for s in range(m)
-    }
-    cents_rows = None
-    for _ in range(iters):
-        raw = []  # (s, code, pos, unrounded mean)
-        for s, (codes, cents) in cb.items():
-            sub = V[:, s * d_sub : (s + 1) * d_sub]
-            assigned = _argmin_codes(sub, codes, cents)
-            for c in np.unique(assigned):
-                sel = assigned == c
-                mean = sub[sel].sum(axis=0) / sel.sum()
-                raw.extend(
-                    (int(s), int(c), int(p), float(x))
-                    for p, x in enumerate(mean)
-                )
-        rounded = (
-            spark.createDataFrame(
-                raw, "s int, code int, pos int, x double"
-            )
-            .select("s", "code", "pos", F.round("x", round_decimals).alias("v"))
-            .collect()
-        )
-        by_key: dict = {}
-        for r in rounded:
-            by_key.setdefault((r["s"], r["code"]), []).append((r["pos"], r["v"]))
-        cents_rows = [
-            (s, c, [v for _, v in sorted(pv)])
-            for (s, c), pv in sorted(by_key.items())
-        ]
-        by_s: dict[int, list] = {}
-        for s, code, cw in cents_rows:
-            by_s.setdefault(s, []).append((code, cw))
-        cb = {}
-        for s, lst in by_s.items():
-            lst.sort()
-            cb[s] = (
-                np.array([c for c, _ in lst], dtype=np.int64),
-                np.array([cw for _, cw in lst], dtype=np.float64),
-            )
-    return spark.createDataFrame(cents_rows, "s int, code int, cw array<double>")
 
 
 def pq_train(
@@ -1455,31 +1361,38 @@ def pq_train(
     k_codes: int = 16,
     iters: int = 2,
     round_decimals: int = 6,
-    driver_max_rows: int = PQ_TRAIN_DRIVER_MAX_ROWS,
 ) -> DataFrame:
-    """Deterministic PQ codebook — the Arrow-kernel form of
-    :func:`pq_train_hof` (output pinned identical by
-    test_pq_train_kernel_equals_hof; the docstring there holds verbatim).
+    """Deterministic PQ codebook: per subspace s (the s-th ``dim//m``
+    consecutive components), Lloyd's k-means with MIN-SQUARED-L2
+    assignment (ties -> lowest code id; L2 is the standard PQ training
+    objective — it bounds the inner-product quantization error ADC
+    serving cares about). Init = the subvectors of the ``k_codes``
+    lowest-id valid vectors, with code ids remapped DENSE (0..k_codes-1
+    by seed-id rank) so the ADC LUT keys ``s*PQ_KEY_STRIDE+code`` never
+    collide for any id distribution; cluster means rounded to
+    ``round_decimals`` each iteration so an independent engine reproduces
+    every centroid float exactly (the :func:`kmeans_centroids`
+    discipline). Returns ``(s, code, cw)``.
 
     Per iteration the corpus-side assignment AND the cluster partial sums
     run as ONE numpy pass per Arrow batch (:func:`_argmin_codes` —
     bit-identical distances and tie-breaks to the interpreted
-    k_codes x d_sub JVM fold it replaces, guide §4.2) against the
-    collected codebook (bounded m x k_codes rows, an iteration boundary
-    the driver already pays in spirit: the HOF form's lazy 2-iteration
-    chain re-executed per consumer until the caller persisted it, and the
-    collect also truncates the repeated subtree lineage). The means
-    reduction (VERDICT r16 #4) aggregates the kernel's per-batch
-    (s, code, cnt, sums) PARTIALS — at most m x k_codes rows per Arrow
-    batch — instead of posexploding corpus x m x d_sub component rows per
-    iteration, so the per-iteration shuffle is bounded by batch count,
-    not corpus size. Partial sums accumulate in numpy (pairwise) rather
-    than the JVM avg's sequential order; ``round_decimals`` absorbs the
-    reordering exactly as it absorbs partition-order differences — pinned
-    bit-identical to the HOF form on real corpora and hash-graded by the
+    k_codes x d_sub JVM fold, guide §4.2) against the collected codebook
+    (bounded m x k_codes rows; the collect is the iteration boundary and
+    also truncates the repeated subtree lineage). The means reduction
+    aggregates the kernel's per-batch (s, code, cnt, sums) PARTIALS — at
+    most m x k_codes rows per Arrow batch — instead of posexploding
+    corpus x m x d_sub component rows per iteration, so the per-iteration
+    shuffle is bounded by batch count, not corpus size. Partial sums
+    accumulate in numpy (pairwise) rather than the JVM avg's sequential
+    order; ``round_decimals`` absorbs the reordering exactly as it
+    absorbs partition-order differences — pinned bit-identical to the
+    all-JVM reference form in ``tests/reference_impls.py`` on real
+    corpora (test_pq_train_kernel_equals_hof) and hash-graded by the
     DuckDB oracle on every PQ head. The returned frame is rebuilt from
     the final collected rows (exact doubles), so consumers read a 1-line
-    LocalRelation instead of the whole training chain.
+    LocalRelation instead of the whole training chain. At 100 TB train
+    on a ``.sample`` — the iteration loop is unchanged.
     """
     spark = emb.sparkSession
     d_sub = dim // m
@@ -1488,31 +1401,12 @@ def pq_train(
     valid = emb.select(id_col, vec_col).where(
         F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) >= dim)
     )
-    # driver gate (r17): ONE bounded collect replaces the seed collect plus
-    # per-iteration distributed kernel passes when the valid corpus fits —
-    # limit(cap+1) bounds driver memory without a separate count job; a
-    # larger corpus falls through to the distributed loop below, paying
-    # only this one truncated scan extra
-    if (
-        driver_max_rows > 0
-        and emb.schema[id_col].dataType.simpleString()
-        in _PQ_DRIVER_SAFE_ID_TYPES
-    ):
-        bounded = valid.limit(driver_max_rows + 1).collect()
-        # a null id has no Python order to mirror Spark's NULLS FIRST seed
-        # pick: the distributed loop handles it (same bailout as the CC gate)
-        if len(bounded) <= driver_max_rows and all(
-            r[0] is not None for r in bounded
-        ):
-            return _pq_train_driver(
-                spark, bounded, dim, m, k_codes, iters, round_decimals
-            )
-
-    # seeds: the k_codes LOWEST-id VALID vectors (bounded collect), dense
-    # codes 0..k-1 by id rank — identical to the rows the HOF form
-    # broadcast-joins on any corpus where the lowest-id vectors are valid
-    # (null/short vectors would crash the numpy seed matrix; the HOF form
-    # degrades to null codewords there — ADVICE r16 #2 picks the filter).
+    # seeds: the k_codes LOWEST-id VALID vectors (bounded collect; a null
+    # id sorts first, as in ORDER BY), dense codes 0..k-1 by id rank —
+    # identical to the rows the reference form broadcast-joins on any
+    # corpus where the lowest-id vectors are valid (null/short vectors
+    # would crash the numpy seed matrix; the reference degrades to null
+    # codewords there, so the kernel path filters them out).
     # _sub_slice casts components to double; float32 widens exactly.
     seed_rows = valid.orderBy(F.col(id_col)).limit(k_codes).collect()
     seed_mat = np.array([list(r[1])[:dim] for r in seed_rows], dtype=np.float64)
@@ -1645,107 +1539,6 @@ def _pq_assign_sum_kernel(subv: DataFrame, cb: dict) -> DataFrame:
     return subv.select("s", "sv").mapInPandas(_batches, out_schema)
 
 
-def pq_train_hof(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    m: int = 8,
-    k_codes: int = 16,
-    iters: int = 2,
-    round_decimals: int = 6,
-) -> DataFrame:
-    """Deterministic PQ codebook: per subspace s (the s-th ``dim//m``
-    consecutive components), Lloyd's k-means with MIN-SQUARED-L2
-    assignment (ties -> lowest code id; L2 is the standard PQ training
-    objective — it bounds the inner-product quantization error ADC
-    serving cares about). Init = the subvectors of the ``k_codes``
-    lowest-id vectors, with code ids remapped DENSE (0..k_codes-1 by
-    seed-id rank) so the ADC LUT keys ``s*PQ_KEY_STRIDE+code`` never
-    collide for any id distribution; cluster means rounded to ``round_decimals`` each
-    iteration so an independent engine reproduces every centroid float
-    exactly (the :func:`kmeans_centroids` discipline). Returns
-    ``(s, code, cw)``.
-
-    Scale: one exploded (corpus x m) frame per iteration for the means
-    (a k*m*d_sub-cell aggregate — tiny), assignment via one broadcast
-    codebook-array row folded inside the scan; at 100 TB train on a
-    ``.sample`` — the iteration loop is unchanged. This all-JVM form is
-    the independent reference implementation :func:`pq_train`'s numpy
-    kernel is pinned against.
-    """
-    d_sub = dim // m
-    sub_entries = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("int").alias("s"),
-                _sub_slice(vec_col, s, d_sub).alias("sv"),
-            )
-            for s in range(m)
-        ]
-    )
-    subv = emb.select(F.col(id_col), F.explode(sub_entries).alias("e")).select(
-        F.col(id_col), F.col("e.s").alias("s"), F.col("e.sv").alias("sv")
-    )
-    # seeds = the k_codes LOWEST-id vectors' subvectors (the ivf_topk /
-    # kmeans_centroids convention — works for any id distribution, not
-    # just 0..n dense), REMAPPED to dense codes 0..k_codes-1 by seed-id
-    # rank: raw seed ids as codes would collide across subspaces in the
-    # ADC map keys (key = s*PQ_KEY_STRIDE + code) whenever a corpus's
-    # lowest ids reach PQ_KEY_STRIDE, silently corrupting top-k. The
-    # row_number window runs over exactly k_codes rows — a single tiny
-    # partition, not a corpus sort.
-    seed_w = Window.orderBy(F.col(id_col))
-    seed_ids = (
-        emb.select(id_col)
-        .orderBy(F.col(id_col))
-        .limit(k_codes)
-        .select(id_col, (F.row_number().over(seed_w) - 1).cast("int").alias("code"))
-    )
-    cents = subv.join(F.broadcast(seed_ids), id_col).select(
-        "s", "code", F.col("sv").alias("cw")
-    )
-    for _ in range(iters):
-        assigned = _pq_assign_subv(subv, cents)
-        comps = assigned.select(
-            "s", "code", F.posexplode(F.col("sv")).alias("pos", "x")
-        )
-        means = comps.groupBy("s", "code", "pos").agg(
-            F.round(F.avg("x"), round_decimals).alias("v")
-        )
-        cents = means.groupBy("s", "code").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda t: t["v"],
-            ).alias("cw")
-        )
-    return cents
-
-
-def _pq_assign_subv(subv: DataFrame, codebook: DataFrame) -> DataFrame:
-    """(id, s, sv) -> + ``code``: min-squared-L2 code within the row's own
-    subspace, via one broadcast codebook-array row (strictly-less keeps
-    the lowest code on exact ties because the array is (s, code)-sorted)."""
-    init = F.struct(
-        F.lit(float("inf")).alias("d"), F.lit(None).cast("int").alias("code")
-    )
-
-    def chooser(acc, c):
-        cand = F.struct(
-            _sq_l2(F.col("sv"), c["cw"]).alias("d"), c["code"].alias("code")
-        )
-        return F.when(cand["d"] < acc["d"], cand).otherwise(acc)
-
-    return subv.crossJoin(F.broadcast(_cb_array(codebook))).select(
-        *[c for c in subv.columns],
-        F.aggregate(
-            F.filter(F.col("_cb"), lambda c: c["s"] == F.col("s")),
-            init,
-            chooser,
-        )["code"].alias("code"),
-    )
-
-
 def pq_encode(
     emb: DataFrame,
     codebook: DataFrame,
@@ -1757,12 +1550,16 @@ def pq_encode(
 ) -> DataFrame:
     """Encode each vector as its m nearest-codeword ids —
     ``(id_col, codes array<int>, *extra_cols)`` with position = subspace.
-    The Arrow-kernel form of :func:`pq_encode_hof` (output pinned
-    identical by test_pq_encode_kernel_equals_hof): still ENTIRELY
-    MAP-SIDE and zero-shuffle, but the m interpreted argmin folds per row
-    run as ONE numpy pass per Arrow batch (:func:`_argmin_codes` —
-    bit-identical distances and tie-breaks, guide §4.2) against the
-    collected codebook (bounded m x k_codes rows). A null or
+    ENTIRELY MAP-SIDE and zero-shuffle — the ingest projection a 100-TB
+    system runs once at write time and stores as the m-byte serving copy
+    (alongside ``centroid_id`` when composed with IVF —
+    :func:`build_ivf_pq_index` passes it through ``extra_cols`` so
+    assignment + encode stay ONE scan). The m argmin searches per row run
+    as ONE numpy pass per Arrow batch (:func:`_argmin_codes` —
+    bit-identical distances and tie-breaks to the interpreted JVM folds
+    of the reference form in ``tests/reference_impls.py``, pinned by
+    test_pq_encode_kernel_equals_hof; guide §4.2) against the collected
+    codebook (bounded m x k_codes rows). A null or
     shorter-than-``dim`` vector encodes to an all-null codes array (the
     fold's null-propagation contract). Only (id, vec, extra) columns
     cross the Python boundary."""
@@ -1802,50 +1599,6 @@ def pq_encode(
 
     return emb.select(id_col, vec_col, *extra_cols).mapInPandas(
         _batches, out_schema
-    )
-
-
-def pq_encode_hof(
-    emb: DataFrame,
-    codebook: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    m: int = 8,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Encode each vector as its m nearest-codeword ids —
-    ``(id_col, codes array<int>)`` with position = subspace. ENTIRELY
-    MAP-SIDE: m argmin folds over one broadcast codebook-array row inside
-    the corpus scan, no explode, no shuffle — this is the ingest
-    projection a 100-TB system runs once at write time and stores as the
-    m-byte serving copy (alongside ``centroid_id`` when composed with
-    IVF — :func:`build_ivf_pq_index` passes it through ``extra_cols`` so
-    assignment + encode stay ONE scan). This all-JVM form is the
-    independent reference implementation :func:`pq_encode`'s numpy
-    kernel is pinned against."""
-    d_sub = dim // m
-    init = F.struct(
-        F.lit(float("inf")).alias("d"), F.lit(None).cast("int").alias("code")
-    )
-
-    def code_for(s: int):
-        sv = _sub_slice(vec_col, s, d_sub)
-
-        def chooser(acc, c):
-            cand = F.struct(
-                _sq_l2(sv, c["cw"]).alias("d"), c["code"].alias("code")
-            )
-            return F.when(cand["d"] < acc["d"], cand).otherwise(acc)
-
-        return F.aggregate(
-            F.filter(F.col("_cb"), lambda c: c["s"] == F.lit(s)), init, chooser
-        )["code"]
-
-    return emb.crossJoin(F.broadcast(_cb_array(codebook))).select(
-        F.col(id_col),
-        F.array(*[code_for(s) for s in range(m)]).alias("codes"),
-        *[F.col(c) for c in extra_cols],
     )
 
 

@@ -1005,9 +1005,7 @@ def trigram_logprob_micro_sql(
     )
 
 
-def trigram_logprob_scores(
-    df: DataFrame, id_col: str, text_col: str, extract_kernel: bool = True
-) -> DataFrame:
+def trigram_logprob_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Mean per-token surprisal under a corpus-fit INTERPOLATED TRIGRAM
     LM — one model order above :func:`bigram_logprob_scores`, one closer
     to the KenLM-style 5-gram gate CCNet uses in production.
@@ -1031,37 +1029,15 @@ def trigram_logprob_scores(
     DOUBLE) — n_tokens == the number of scored trigrams, by construction
     of the padding.
     """
-    if extract_kernel:
-        # the r17 Arrow position-stream kernel at order 3 — bit-identical
-        # rows (pinned by test_ngram_stream_kernel_equals_explode at this
-        # order); the bespoke broadcast-interpolation PLAN below is
-        # unchanged, only the extraction runs vectorized (guide §4.2)
-        tri = _ngram_position_stream_kernel(df, id_col, text_col, 3).select(
-            F.col(id_col),
-            F.col("g1").alias("u"),
-            F.col("g2").alias("v"),
-            F.col("g3").alias("w"),
-        )
-    else:
-        t = tokens(F.col(text_col))
-        padded = F.concat(F.array(F.lit(LM_BOS), F.lit(LM_BOS)), t)
-        tri_arr = F.when(
-            F.size(t) >= 1,
-            F.transform(
-                F.sequence(F.lit(1), F.size(t)),
-                lambda i: F.struct(
-                    F.element_at(padded, i).alias("u"),
-                    F.element_at(padded, i + 1).alias("v"),
-                    F.element_at(padded, i + 2).alias("w"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<u:string,v:string,w:string>>"))
-        tri = df.select(F.col(id_col), F.explode(tri_arr).alias("_g")).select(
-            F.col(id_col),
-            F.col("_g.u").alias("u"),
-            F.col("_g.v").alias("v"),
-            F.col("_g.w").alias("w"),
-        )
+    # the Arrow position-stream kernel at order 3 (pinned row for row
+    # against the JVM explode chain by test_ngram_stream_kernel_equals_explode);
+    # the bespoke broadcast-interpolation PLAN below runs on its rows
+    tri = _ngram_position_stream_kernel(df, id_col, text_col, 3).select(
+        F.col(id_col),
+        F.col("g1").alias("u"),
+        F.col("g2").alias("v"),
+        F.col("g3").alias("w"),
+    )
     ct = tri.groupBy("u", "v", "w").agg(F.count("*").alias("c_uvw"))
     # read four times (prefix/tail/unigram rollups + the score join):
     # persist so the corpus-keyed exchange runs once
@@ -1137,8 +1113,8 @@ def _ngram_position_stream_kernel(
     df: DataFrame, id_col: str, text_col: str, order: int
 ) -> DataFrame:
     """The padded position stream ``(id, g1..gN)`` as ONE Arrow kernel —
-    the §4.2 form of the transform/element_at/struct/explode chain in
-    :func:`ngram_logprob_scores` (r17; pinned bit-identical by
+    the §4.2 form of the transform/element_at/struct/explode chain kept in
+    ``tests/reference_impls.py`` (pinned bit-identical by
     test_ngram_stream_kernel_equals_explode and the unchanged DuckDB
     oracle). Per batch everything is vectorized C: one
     ``split_pattern`` tokenization, index arithmetic in numpy, and one
@@ -1207,8 +1183,6 @@ def ngram_logprob_scores(
     order: int = 5,
     prune_singletons: bool = True,
     suffix_partitioning: bool = True,
-    fp128_score_join: bool = False,
-    extract_kernel: bool = True,
 ) -> DataFrame:
     """Mean per-token surprisal under a corpus-fit interpolated
     ``order``-gram LM — the generalization the trigram gate's double-BOS
@@ -1276,29 +1250,9 @@ def ngram_logprob_scores(
     if order not in NGRAM_WEIGHTS:
         raise ValueError(f"order must be one of {sorted(NGRAM_WEIGHTS)}")
     gcols = [f"g{i}" for i in range(1, order + 1)]
-    if extract_kernel:
-        # §4.2 Arrow kernel (r17) — bit-identical rows, pinned by
-        # test_ngram_stream_kernel_equals_explode
-        stream = _ngram_position_stream_kernel(df, id_col, text_col, order)
-    else:
-        t = tokens(F.col(text_col))
-        padded = F.concat(F.array(*[F.lit(LM_BOS)] * (order - 1)), t)
-        struct_type = f"array<struct<{','.join(c + ':string' for c in gcols)}>>"
-        arr = F.when(
-            F.size(t) >= 1,
-            F.transform(
-                F.sequence(F.lit(1), F.size(t)),
-                lambda i: F.struct(
-                    *[
-                        F.element_at(padded, i + j).alias(gcols[j])
-                        for j in range(order)
-                    ]
-                ),
-            ),
-        ).otherwise(F.array().cast(struct_type))
-        stream = df.select(F.col(id_col), F.explode(arr).alias("_g")).select(
-            F.col(id_col), *[F.col(f"_g.{c}").alias(c) for c in gcols]
-        )
+    # §4.2 Arrow kernel, pinned row for row against the JVM explode chain
+    # by test_ngram_stream_kernel_equals_explode
+    stream = _ngram_position_stream_kernel(df, id_col, text_col, order)
     # ONE corpus exchange. With suffix_partitioning it is keyed on the
     # deepest suffix every s-rollup shares (last two tokens) and the
     # persisted exchanged stream ALSO serves as the probe side of the
@@ -1384,36 +1338,11 @@ def ngram_logprob_scores(
             )
         )
         pruned = score_table.filter(F.col(f"c_{order}") >= 2).select(*gcols, "micro")
-        if fp128_score_join:
-            # 128-bit fingerprint join key (two independent xxhash64, the
-            # second salted — the passage-dedup idiom; internal key only,
-            # never output; collision odds ~1e-15 at 1e12 distinct grams).
-            # Measured in SCALE.md ("fp128 stream-score join key A/B") and
-            # OFF by default — vetoed on measurement: in the broadcast
-            # regime it narrows an exchange that does not exist (21.43 MB
-            # byte-identical), and in the forced-shuffle regime the
-            # promised severalfold width win collapses to -4.4% because
-            # LZ4 shuffle compression already shrinks low-entropy token
-            # strings to near the 16 incompressible fingerprint bytes.
-            # The string key also keeps the join compatible with the
-            # stream's trailing-bigram partitioning (HashPartitioning on
-            # a subset of the join keys), which the fingerprint destroys.
-            fp = [
-                F.xxhash64(*gcols).alias("_fp1"),
-                F.xxhash64(*gcols, F.lit(-1640531527)).alias("_fp2"),
-            ]
-            nonsing = (
-                stream.select(id_col, *fp)
-                .join(pruned.select(*fp, "micro"), ["_fp1", "_fp2"])
-                .groupBy(id_col)
-                .agg(F.count("*").alias("_n"), F.sum("micro").alias("_m"))
-            )
-        else:
-            nonsing = (
-                stream.join(pruned, gcols)
-                .groupBy(id_col)
-                .agg(F.count("*").alias("_n"), F.sum("micro").alias("_m"))
-            )
+        nonsing = (
+            stream.join(pruned, gcols)
+            .groupBy(id_col)
+            .agg(F.count("*").alias("_n"), F.sum("micro").alias("_m"))
+        )
         scored = (
             nonsing.unionByName(sing)
             .groupBy(id_col)
@@ -1456,96 +1385,6 @@ GOPHER_REP_MAX_DUP_NGRAM_CHAR_PPM = {
 }
 
 
-def _sum_len(arr: Column) -> Column:
-    """bigint sum of string lengths over an array column (one fold)."""
-    return F.aggregate(
-        arr, F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x)
-    )
-
-
-def _top_gram_num(grams: Column) -> Column:
-    """``count(most frequent gram) * length(that gram)`` as bigint.
-
-    Sorted-runs fold: after ``array_sort`` equal grams are adjacent, so
-    one O(G) pass tracks the current run and keeps the best strictly-
-    greater run — count ties therefore resolve to the lexicographically
-    SMALLEST gram (its run completes first in sorted order), which the
-    oracle mirrors with ``ORDER BY c DESC, g``. Empty input -> 0.
-    O(G log G) per row with zero shuffle, vs the exploded
-    groupBy(doc, gram) alternative that exchanges the whole gram table.
-
-    A top gram occurring ONCE is not repetition — its numerator is 0 (a
-    short document would otherwise fail the char-share bound on a gram
-    that never repeats; Gopher's rule targets repeated boilerplate).
-    """
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("bigint").alias("run"),
-        F.lit(0).cast("bigint").alias("bc"),
-        F.lit(0).cast("bigint").alias("bl"),
-    )
-
-    def step(acc, x):
-        # x == NULL-prev is NULL -> otherwise(1): a fresh run
-        run2 = F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-            F.lit(1).cast("bigint")
-        )
-        better = run2 > acc["bc"]
-        return F.struct(
-            x.alias("prev"),
-            run2.alias("run"),
-            F.when(better, run2).otherwise(acc["bc"]).alias("bc"),
-            F.when(better, F.length(x).cast("bigint"))
-            .otherwise(acc["bl"])
-            .alias("bl"),
-        )
-
-    return F.aggregate(
-        F.array_sort(grams),
-        init,
-        step,
-        lambda acc: F.when(acc["bc"] >= 2, acc["bc"] * acc["bl"]).otherwise(
-            F.lit(0).cast("bigint")
-        ),
-    )
-
-
-def _dup_gram_chars(grams: Column) -> Column:
-    """Chars in ALL occurrences of grams that occur more than once
-    (``sum over grams with count>1 of count*length``), as one sorted-runs
-    fold: when a run reaches its 2nd element both occurrences enter the
-    sum, each further element adds itself."""
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("bigint").alias("run"),
-        F.lit(0).cast("bigint").alias("dc"),
-    )
-
-    def step(acc, x):
-        eq = x == acc["prev"]
-        run2 = F.when(eq, acc["run"] + 1).otherwise(F.lit(1).cast("bigint"))
-        add = (
-            F.when(eq & (acc["run"] == 1), F.length(x).cast("bigint") * 2)
-            .when(eq, F.length(x).cast("bigint"))
-            .otherwise(F.lit(0).cast("bigint"))
-        )
-        return F.struct(
-            x.alias("prev"), run2.alias("run"), (acc["dc"] + add).alias("dc")
-        )
-
-    return F.aggregate(F.array_sort(grams), init, step, lambda acc: acc["dc"])
-
-
-def _ppm_expr(num: str, den: str) -> Column:
-    """Truncating fixed-point ppm over exact non-negative bigints —
-    ``div`` truncates toward zero in Spark exactly as ``//`` does in
-    DuckDB, so the fraction grades bit-exactly on both engines."""
-    return F.expr(
-        f"CAST(CASE WHEN {den} > 0 THEN div(1000000 * {num}, {den}) "
-        f"ELSE 0 END AS BIGINT)"
-    )
-
-
 def gopher_repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Gopher repetition rules (Rae et al. 2021 Table A1): duplicate-line
     and duplicate-paragraph fractions (row and character weighted),
@@ -1581,8 +1420,8 @@ def gopher_repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFr
     top-2/3/4-gram chars, 128..4096 dup-5..10-gram chars.
     """
     # Arrow kernel (one native pass per batch; identical integers) — the
-    # JVM fold-chain reference lives in :func:`gopher_repetition_stats_hof`
-    # and the equality is pinned by test_gopher_repetition_arrow_equals_hof.
+    # JVM fold-chain reference lives in tests/reference_impls.py and the
+    # equality is pinned by test_gopher_repetition_arrow_equals_hof.
     import pandas as pd
 
     from pyspark.sql.types import BooleanType, LongType, StructField, StructType
@@ -1627,141 +1466,17 @@ def gopher_repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFr
     return df.select(id_col, text_col).mapInPandas(_batches, out_schema)
 
 
-def gopher_repetition_stats_hof(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """The original all-JVM repetition chain — the independent reference
-    implementation :func:`gopher_repetition_stats`'s Arrow kernel is
-    pinned against."""
-    derived = _gopher_rep_derived(df, id_col, text_col)
-    return derived.withColumn(
-        "rep_flags", _gopher_rep_flags_expr().cast("bigint")
-    ).withColumn("keep", F.col("rep_flags") == 0)
-
-
-def _gopher_rep_derived(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    extra_cols: tuple[Column, ...] = (),
-    extra_names: tuple[str, ...] = (),
-) -> DataFrame:
-    """The repetition gate's arrays -> stats -> ppm chain, shared by
-    :func:`gopher_repetition_stats` and :func:`gopher_combined_gate`.
-    ``extra_cols`` are additional per-row projections computed INSIDE the
-    same cached scan (the fused gate threads the quality base stats
-    through here — that is what makes the combined gate one corpus scan);
-    ``extra_names`` are their aliases, carried through each stage."""
-    raw = F.coalesce(F.col(text_col), F.lit(""))
-    norm = F.trim(F.regexp_replace(raw, r"\s+", " "))
-    # materialize the segment/token ARRAYS once: the metric projection
-    # below references lines 4x, paragraphs 4x and the token array 9x —
-    # without this boundary alias-substitution re-splits and re-normalizes
-    # the text per reference (the HOF re-inline trap; see
-    # simhash_signatures). One cache of three small arrays per row.
-    arrays = scoped_persist(
-        df.select(
-            F.col(id_col),
-            F.filter(F.split(raw, "\n"), lambda x: x != "").alias("_lines"),
-            F.filter(F.split(raw, "\n\n"), lambda x: x != "").alias("_paras"),
-            F.split(norm, " ").alias("_wt"),
-            F.length(norm).cast("bigint").alias("den_chars"),
-            *extra_cols,
-        )
-    )
-
-    def grams(n: int):
-        # token_shingles semantics inlined over the MATERIALIZED token
-        # array (one slice + join per gram; no re-split per metric)
-        wt = F.col("_wt")
-        upper = F.greatest(F.size(wt) - (n - 1), F.lit(0))
-        idx = F.when(upper > 0, F.sequence(F.lit(1), upper)).otherwise(
-            F.array().cast("array<int>")
-        )
-        return F.transform(idx, lambda i: F.array_join(F.slice(wt, i, n), " "))
-
-    lines, paras = F.col("_lines"), F.col("_paras")
-    stats = arrays.select(
-        F.col(id_col),
-        F.size(lines).cast("bigint").alias("n_lines"),
-        F.size(F.array_distinct(lines)).cast("bigint").alias("nd_lines"),
-        _sum_len(lines).alias("lc_tot"),
-        _sum_len(F.array_distinct(lines)).alias("lc_dist"),
-        F.size(paras).cast("bigint").alias("n_paras"),
-        F.size(F.array_distinct(paras)).cast("bigint").alias("nd_paras"),
-        _sum_len(paras).alias("pc_tot"),
-        _sum_len(F.array_distinct(paras)).alias("pc_dist"),
-        F.col("den_chars"),
-        *[
-            _top_gram_num(grams(n)).alias(f"top{n}_num")
-            for n in GOPHER_REP_MAX_TOP_NGRAM_CHAR_PPM
-        ],
-        *[
-            _dup_gram_chars(grams(n)).alias(f"dup{n}_chars")
-            for n in GOPHER_REP_MAX_DUP_NGRAM_CHAR_PPM
-        ],
-        *[F.col(c) for c in extra_names],
-    )
-    # second cache boundary: without it the chained selects below collapse
-    # into one projection and alias-substitution re-evaluates every fold
-    # ~6x (ppm num+den, the flag term, the keep term). ~15 bigints per doc.
-    stats = scoped_persist(stats)
-    derived = stats.select(
-        F.col(id_col),
-        "n_lines",
-        "n_paras",
-        _ppm_expr("(n_lines - nd_lines)", "n_lines").alias("dup_line_frac_ppm"),
-        _ppm_expr("(lc_tot - lc_dist)", "lc_tot").alias("dup_line_char_frac_ppm"),
-        _ppm_expr("(n_paras - nd_paras)", "n_paras").alias("dup_para_frac_ppm"),
-        _ppm_expr("(pc_tot - pc_dist)", "pc_tot").alias("dup_para_char_frac_ppm"),
-        *[
-            _ppm_expr(f"top{n}_num", "den_chars").alias(f"top{n}_char_frac_ppm")
-            for n in GOPHER_REP_MAX_TOP_NGRAM_CHAR_PPM
-        ],
-        *[
-            _ppm_expr(f"dup{n}_chars", "den_chars").alias(f"dup{n}_char_frac_ppm")
-            for n in GOPHER_REP_MAX_DUP_NGRAM_CHAR_PPM
-        ],
-        *[F.col(c) for c in extra_names],
-    )
-    return derived
-
-
-def _gopher_rep_flags_expr() -> Column:
-    """Repetition flag bitmask over the named ppm columns of
-    :func:`_gopher_rep_derived`'s output."""
-    flags = (
-        F.when(F.col("dup_line_frac_ppm") > GOPHER_REP_MAX_DUP_LINE_PPM, 1)
-        .otherwise(0)
-        + F.when(
-            F.col("dup_line_char_frac_ppm") > GOPHER_REP_MAX_DUP_LINE_CHAR_PPM, 2
-        ).otherwise(0)
-        + F.when(F.col("dup_para_frac_ppm") > GOPHER_REP_MAX_DUP_PARA_PPM, 4)
-        .otherwise(0)
-        + F.when(
-            F.col("dup_para_char_frac_ppm") > GOPHER_REP_MAX_DUP_PARA_CHAR_PPM, 8
-        ).otherwise(0)
-    )
-    bit = 16
-    for n, thr in GOPHER_REP_MAX_TOP_NGRAM_CHAR_PPM.items():
-        flags = flags + F.when(F.col(f"top{n}_char_frac_ppm") > thr, bit).otherwise(0)
-        bit *= 2
-    for n, thr in GOPHER_REP_MAX_DUP_NGRAM_CHAR_PPM.items():
-        flags = flags + F.when(F.col(f"dup{n}_char_frac_ppm") > thr, bit).otherwise(0)
-        bit *= 2
-    return flags
-
-
 def _gate_row_stats(raw: str, _stop=None, _alpha=None) -> tuple:
     """(gopher_flags, rep_flags, n_lines, n_paras, [13 rep ppms in flag-bit
     order]) of one document — the exact integer semantics of
     :func:`_gopher_quality_flags_expr` over
-    :func:`_gopher_quality_base_cols` and :func:`_gopher_rep_flags_expr`
-    over :func:`_gopher_rep_derived`, computed in one native pass.
+    :func:`_gopher_quality_base_cols` and of the repetition fold chain in
+    ``tests/reference_impls.py``, computed in one native pass.
 
     Every statistic is an exact integer (counts, code-point lengths,
     truncating ppm divisions), so this agrees bit-for-bit with the JVM
-    fold chain (pinned by test_gopher_combined_gate_arrow_equals_hof):
+    fold chain (pinned by test_gopher_combined_gate_arrow_equals_hof and
+    test_gopher_repetition_arrow_equals_hof):
 
     * quality tokens = ``raw.split(" ")`` (the ``tokens()`` convention:
       literal single-space split, trailing empties kept — identical to
@@ -1893,25 +1608,23 @@ def gopher_combined_gate(
     df: DataFrame, id_col: str, text_col: str, carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """The Gopher quality gate AND the Gopher repetition gate fused into
-    ONE corpus scan: the quality base statistics (four folds over the
-    row's token array) are threaded through the repetition chain's cached
-    arrays projection, so the combined keep decision costs one read of
+    ONE corpus scan: :func:`_gate_row_stats` computes both rule families'
+    statistics per row, so the combined keep decision costs one read of
     the text instead of two scans + a doc_id keep-set join — at 100 TB
     the text scans dominate the gate stage, so this halves it. Returns
     ``(id_col, gopher_flags, rep_flags, keep, *carry)`` with keep = both
-    bitmasks zero; every flag formula is the SAME shared expression the
-    standalone graded operators use (:func:`_gopher_quality_flags_expr` /
-    :func:`_gopher_rep_flags_expr`), so keep here ==
+    bitmasks zero; keep here ==
     ``gopher_quality_flags(...).keep AND gopher_repetition_stats(...).keep``
-    row for row (pinned by test).
+    row for row, and every column is pinned bit-for-bit against the
+    all-JVM reference form in ``tests/reference_impls.py``
+    (test_gopher_combined_gate_arrow_equals_hof).
 
     ``carry`` names input columns to pass through (e.g. the text itself):
     a consumer that needs gated ROWS, not just gated ids, carries them
     here and skips the join back onto the corpus entirely — the id-keyed
-    exchange that join costs at scale never happens. Carried columns ride
-    BOTH internal cache boundaries (DataFrame.persist is
-    MEMORY_AND_DISK, so an executor under pressure spills rather than
-    OOMs) — carry what downstream actually needs, not the whole row."""
+    exchange that join costs at scale never happens. Carried columns
+    cross the Python boundary — carry what downstream actually needs,
+    not the whole row."""
     reserved = {
         "n_words", "total_word_chars", "alpha_words", "stop_hits",
         "mean_word_len_centi", "alpha_word_ppm", "gopher_flags",
@@ -1973,42 +1686,3 @@ def gopher_combined_gate(
             yield out
 
     return df.select(*in_cols).mapInPandas(_gate_batches, out_schema)
-
-
-def gopher_combined_gate_hof(
-    df: DataFrame, id_col: str, text_col: str, carry: tuple[str, ...] = ()
-) -> DataFrame:
-    """The original all-JVM fused gate (HOF fold chain) — kept as the
-    independent reference implementation the Arrow kernel is pinned
-    against (test_gopher_combined_gate_arrow_equals_hof) and as the
-    fallback for environments without Arrow workers."""
-    derived = _gopher_rep_derived(
-        df,
-        id_col,
-        text_col,
-        extra_cols=tuple(_gopher_quality_base_cols(text_col))
-        + tuple(F.col(c) for c in carry),
-        extra_names=(
-            "n_words",
-            "total_word_chars",
-            "alpha_words",
-            "stop_hits",
-            *carry,
-        ),
-    )
-    return (
-        derived.withColumn(
-            "mean_word_len_centi",
-            F.expr("div(100 * total_word_chars, n_words)").cast("bigint"),
-        )
-        .withColumn(
-            "alpha_word_ppm",
-            F.expr("div(1000000 * alpha_words, n_words)").cast("bigint"),
-        )
-        .withColumn("gopher_flags", _gopher_quality_flags_expr().cast("bigint"))
-        .withColumn("rep_flags", _gopher_rep_flags_expr().cast("bigint"))
-        .withColumn(
-            "keep", (F.col("gopher_flags") == 0) & (F.col("rep_flags") == 0)
-        )
-        .select(id_col, "gopher_flags", "rep_flags", "keep", *carry)
-    )

@@ -334,6 +334,31 @@ def test_connected_components_nonconvergence_falls_back(spark):
         ).collect()
     }
     assert got == {i: 0 for i in range(n + 1)}
+    # self-loop-only and null-endpoint nodes: the fallback and the two-phase
+    # algorithm keep the converged loop's row set (each labels itself)
+    from distributed_api_etl_spark.operators.graph import (
+        connected_components_two_phase,
+    )
+
+    odd = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)] + [(7, 7), (None, 9)],
+        "d1 bigint, d2 bigint",
+    )
+
+    def rows(df):
+        return sorted(
+            (tuple(r) for r in df.collect()),
+            key=lambda t: (t[0] is not None, t[0] or 0),
+        )
+
+    converged = rows(connected_components(odd, driver_max_edges=0))
+    assert converged == [(None, None)] + [(i, 1) for i in range(1, 7)] + [
+        (7, 7),
+        (9, 9),
+    ]
+    fallback = connected_components(odd, max_iter=1, driver_max_edges=0)
+    assert rows(fallback) == converged
+    assert rows(connected_components_two_phase(odd)) == converged
 
 
 def test_connected_components_driver_gate_edge_cases(spark):
@@ -2180,30 +2205,7 @@ def test_ngram_stream_kernel_equals_explode(spark, sf_dir):
     from distributed_api_etl_spark.operators.text import (
         _ngram_position_stream_kernel,
     )
-    from pyspark.sql import functions as F
-    from distributed_api_etl_spark.functions.textfns import tokens
-    from distributed_api_etl_spark.operators.text import LM_BOS
-
-    def explode_stream(df, order):
-        gcols = [f"g{i}" for i in range(1, order + 1)]
-        t = tokens(F.col("text"))
-        padded = F.concat(F.array(*[F.lit(LM_BOS)] * (order - 1)), t)
-        struct_type = f"array<struct<{','.join(c + ':string' for c in gcols)}>>"
-        arr = F.when(
-            F.size(t) >= 1,
-            F.transform(
-                F.sequence(F.lit(1), F.size(t)),
-                lambda i: F.struct(
-                    *[
-                        F.element_at(padded, i + j).alias(gcols[j])
-                        for j in range(order)
-                    ]
-                ),
-            ),
-        ).otherwise(F.array().cast(struct_type))
-        return df.select(F.col("doc_id"), F.explode(arr).alias("_g")).select(
-            F.col("doc_id"), *[F.col(f"_g.{c}").alias(c) for c in gcols]
-        )
+    from tests.reference_impls import explode_stream
 
     edge = spark.createDataFrame(
         [
@@ -2220,7 +2222,10 @@ def test_ngram_stream_kernel_equals_explode(spark, sf_dir):
     for frame in (edge, docs):
         for order in (3, 5):
             a = sorted(
-                map(tuple, explode_stream(frame, order).collect())
+                map(
+                    tuple,
+                    explode_stream(frame, "doc_id", "text", order).collect(),
+                )
             )
             b = sorted(
                 map(
@@ -2245,25 +2250,16 @@ def test_fivegram_knobs_are_output_invariant(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     variants = {}
-    combos = [(ps, sp, False) for ps in (False, True) for sp in (False, True)]
-    combos.append((True, True, True))  # the fp128 join key (r10 A/B knob)
-    for ps, sp, fp in combos:
-        rows = ngram_logprob_scores(
-            docs, "doc_id", "text", order=5,
-            prune_singletons=ps, suffix_partitioning=sp, fp128_score_join=fp,
-        ).collect()
-        variants[(ps, sp, fp)] = sorted(
-            (r.doc_id, r.n_tokens, r.surprisal_micro_sum) for r in rows
-        )
-    # the r17 extraction kernel is a fourth physical knob: the JVM
-    # explode path must agree with the Arrow stream kernel end-to-end
-    rows = ngram_logprob_scores(
-        docs, "doc_id", "text", order=5, extract_kernel=False
-    ).collect()
-    variants[("explode",)] = sorted(
-        (r.doc_id, r.n_tokens, r.surprisal_micro_sum) for r in rows
-    )
-    baseline = variants[(False, False, False)]
+    for ps in (False, True):
+        for sp in (False, True):
+            rows = ngram_logprob_scores(
+                docs, "doc_id", "text", order=5,
+                prune_singletons=ps, suffix_partitioning=sp,
+            ).collect()
+            variants[(ps, sp)] = sorted(
+                (r.doc_id, r.n_tokens, r.surprisal_micro_sum) for r in rows
+            )
+    baseline = variants[(False, False)]
     assert len(baseline) > 0
     for knobs, rows in variants.items():
         assert rows == baseline, knobs
@@ -2437,10 +2433,8 @@ def test_pq_train_kernel_equals_hof(spark, sf_dir):
     same rounded doubles) on the real corpus AND on an adversarial frame
     with exact-duplicate vectors (argmin tie groups — the strictly-less /
     lowest-code contract)."""
-    from distributed_api_etl_spark.operators.similarity import (
-        pq_train,
-        pq_train_hof,
-    )
+    from distributed_api_etl_spark.operators.similarity import pq_train
+    from tests.reference_impls import pq_train_hof
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
@@ -2450,17 +2444,8 @@ def test_pq_train_kernel_equals_hof(spark, sf_dir):
     ref = rows(
         pq_train_hof(emb, "vec_id", "embedding", 64, m=4, k_codes=8, iters=2)
     )
-    # the default path (the r17 size-gated driver Lloyd's fires at this
-    # corpus size) AND the forced distributed kernel loop must both equal
-    # the interpreted HOF reference
     assert rows(
         pq_train(emb, "vec_id", "embedding", 64, m=4, k_codes=8, iters=2)
-    ) == ref
-    assert rows(
-        pq_train(
-            emb, "vec_id", "embedding", 64, m=4, k_codes=8, iters=2,
-            driver_max_rows=0,
-        )
     ) == ref
     # ties: duplicated vectors, including duplicated SEEDS
     base = [float(x) for x in range(8)]
@@ -2470,49 +2455,39 @@ def test_pq_train_kernel_equals_hof(spark, sf_dir):
     )
     dup_ref = rows(pq_train_hof(dup, "vec_id", "embedding", 8, m=2, k_codes=4))
     assert rows(pq_train(dup, "vec_id", "embedding", 8, m=2, k_codes=4)) == dup_ref
-    assert (
-        rows(
-            pq_train(
-                dup, "vec_id", "embedding", 8, m=2, k_codes=4, driver_max_rows=0
-            )
-        )
-        == dup_ref
-    )
 
 
-def test_pq_train_null_id_driver_gate_matches_loop(spark):
-    """A null id is valid input to the distributed loop, so the driver gate
-    must not crash on it (Python cannot order None against ints): the gated
-    call returns the same codebook as the forced distributed loop."""
+def test_pq_train_null_id_sorts_first(spark):
+    """A null id is valid input: ascending ORDER BY puts NULL first, so its
+    vector seeds code 0 exactly as an id below every other id would. The
+    codebook must equal the one trained with that id replaced by -1."""
     from distributed_api_etl_spark.operators.similarity import pq_train
 
-    corpus = spark.createDataFrame(
-        [(None, [9.0, 1.0, 4.0, 2.0])]
-        + [(i, [float((i * j) % 7) for j in range(4)]) for i in range(12)],
-        "vec_id bigint, embedding array<double>",
-    )
+    vecs = [[9.0, 1.0, 4.0, 2.0]] + [
+        [float((i * j) % 7) for j in range(4)] for i in range(12)
+    ]
 
-    def rows(df):
-        return sorted((r.s, r.code, tuple(r.cw)) for r in df.collect())
-
-    gated = rows(pq_train(corpus, "vec_id", "embedding", 4, m=2, k_codes=3))
-    loop = rows(
-        pq_train(
-            corpus, "vec_id", "embedding", 4, m=2, k_codes=3, driver_max_rows=0
+    def rows(first_id):
+        corpus = spark.createDataFrame(
+            [(first_id, vecs[0])] + [(i, v) for i, v in enumerate(vecs[1:])],
+            "vec_id bigint, embedding array<double>",
         )
-    )
-    assert gated == loop and len(gated) > 0
+        cb = pq_train(corpus, "vec_id", "embedding", 4, m=2, k_codes=3)
+        return sorted((r.s, r.code, tuple(r.cw)) for r in cb.collect())
+
+    with_null = rows(None)
+    assert with_null == rows(-1) and len(with_null) > 0
+    # the null id's vector really seeded a code: it differs from the
+    # codebook trained without that row's id ranking first
+    assert with_null != rows(100)
 
 
 def test_pq_encode_kernel_equals_hof(spark, sf_dir):
     """The numpy PQ encode kernel (r16) must emit the exact codes of the
     m interpreted argmin folds it replaces — real corpus + a trained
     codebook, extra_cols carried through, null vector -> all-null codes."""
-    from distributed_api_etl_spark.operators.similarity import (
-        pq_encode,
-        pq_encode_hof,
-        pq_train,
-    )
+    from distributed_api_etl_spark.operators.similarity import pq_encode, pq_train
+    from tests.reference_impls import pq_encode_hof
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cb = pq_train(emb, "vec_id", "embedding", 64, m=4, k_codes=8, iters=1)
@@ -2798,10 +2773,8 @@ def test_gopher_combined_gate_arrow_equals_hof(spark, sf_dir):
     keep, and carried columns — including the adversarial whitespace /
     tie-break rows below. This is the pin that makes the r16 kernel swap
     a pure optimization (same integers, 3.5x less gate wall at sf0.1)."""
-    from distributed_api_etl_spark.operators.text import (
-        gopher_combined_gate,
-        gopher_combined_gate_hof,
-    )
+    from distributed_api_etl_spark.operators.text import gopher_combined_gate
+    from tests.reference_impls import gopher_combined_gate_hof
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     adversarial = spark.createDataFrame(
@@ -2840,10 +2813,8 @@ def test_gopher_combined_gate_arrow_equals_hof(spark, sf_dir):
 def test_gopher_repetition_arrow_equals_hof(spark, sf_dir):
     """gopher_repetition_stats' Arrow kernel vs the JVM fold chain: every
     ppm column, flag bitmask and keep bit-identical."""
-    from distributed_api_etl_spark.operators.text import (
-        gopher_repetition_stats,
-        gopher_repetition_stats_hof,
-    )
+    from distributed_api_etl_spark.operators.text import gopher_repetition_stats
+    from tests.reference_impls import gopher_repetition_stats_hof
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     a = (
